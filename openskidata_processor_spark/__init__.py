@@ -5,8 +5,8 @@ capabilities of the reference pipeline ``russellporter/openskidata-processor``
 (studied read-only at /root/reference; see SURVEY.md for the operator
 inventory).  Architecture is idiomatic PySpark: declarative DataFrame plans
 optimized by Catalyst, geometry as a numpy/pandas-UDF kernel, spatial joins as
-grid-bucketed equi-joins, iterative graph operators (run-topology
-normalization, ski-area clustering) as DataFrame label propagation.
+grid-bucketed equi-joins, graph operators (run-topology normalization,
+ski-area clustering) as a partition-local union-find with one link shuffle.
 
 Subpackages
 -----------

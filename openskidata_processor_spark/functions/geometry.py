@@ -409,13 +409,39 @@ def covering_cells(geom: dict[str, Any], cell_deg: float) -> list[tuple[int, int
 # pandas-UDF bindings (Arrow-batched)
 # ---------------------------------------------------------------------------
 
+def _ring_masks(x: np.ndarray, y: np.ndarray, ring: list[list[float]]):
+    """``point_in_ring``'s ray casting over arrays, with the same float
+    arithmetic, plus a mask of the points on one of ``ring``'s edges."""
+    inside = np.zeros(len(x), dtype=bool)
+    on_edge = np.zeros(len(x), dtype=bool)
+    n = len(ring)
+    for i in range(n):
+        x1, y1 = ring[i][0], ring[i][1]
+        x2, y2 = ring[(i + 1) % n][0], ring[(i + 1) % n][1]
+        crosses = (y1 > y) != (y2 > y)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xin = (x2 - x1) * (y - y1) / (y2 - y1) + x1
+        inside ^= crosses & (x < xin)
+        on_edge |= ((min(x1, x2) <= x) & (x <= max(x1, x2))
+                    & (min(y1, y2) <= y) & (y <= max(y1, y2))
+                    & ((x2 - x1) * (y - y1) == (y2 - y1) * (x - x1)))
+    return inside, on_edge
+
+
 def make_point_in_polygon_udf(polygon: list[list[list[float]]]):
-    """Vectorized membership test of (x, y) points vs a fixed polygon."""
+    """Vectorized strict-interior test of (x, y) points vs a fixed polygon:
+    ``point_in_polygon``'s ray casting, except that a point on any ring's
+    edge is outside."""
 
     @F.pandas_udf(BooleanType())
     def _udf(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series([point_in_polygon(float(a), float(b), polygon)
-                          for a, b in zip(x, y)])
+        xs, ys = x.to_numpy(dtype=float), y.to_numpy(dtype=float)
+        keep = np.zeros(len(xs), dtype=bool)
+        for i, ring in enumerate(polygon):
+            inside, on_edge = _ring_masks(xs, ys, ring)
+            keep = inside if i == 0 else keep & ~inside
+            keep &= ~on_edge
+        return pd.Series(keep)
 
     return _udf
 

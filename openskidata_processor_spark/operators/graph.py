@@ -1,148 +1,183 @@
-"""Iterative DataFrame graph operators: connected components via label
-propagation.
+"""Connected components as a partition-local union-find.
 
-The engine needs connected components twice (SURVEY.md §2.9/§2.10): run
-chain-merging (segments sharing endpoints) and ski-area transitive spatial
-closure (objects within 500 m).  Both graphs have small-diameter components
-(a run chain, one resort), so plain min-label propagation converges in a
-handful of rounds.
+The engine needs connected components for run chain-merging (segments
+sharing endpoints), ski-area transitive spatial closure (objects within
+500 m; SURVEY.md §2.9/§2.10), near-duplicate groups and the
+``cc_components`` catalog query.  The reference solves the first two in
+memory (``PointGraph``, the recursive ``visitObject``); here one call runs
+three steps:
 
-Scale design:
-- string vertices are hashed to ``xxhash64`` longs so every shuffle moves
-  8-byte keys instead of strings; the string labels are recovered with two
-  joins at the end (component = min vertex string, a deterministic
-  canonical label).  **Integral vertices skip all of that**: the ids are
-  already shuffle-efficient longs and the numeric min IS the canonical
-  label, so the numeric path runs zero extra joins (auto-detected from the
-  edge dtypes — the dedup group-resolution path);
-- each iteration is one shuffle (edge join + min aggregation);
-- convergence is detected with a single scalar action per iteration: the
-  label sum strictly decreases iff any label changed (labels only move
-  down), so no join-and-compare pass is needed.  Each iteration's labels
-  are lazily persisted before that action, so the action materializes the
-  round once and the next round reads the cache instead of recomputing the
-  whole join chain (without this the work per round grows linearly between
-  lineage cuts);
-- a lineage cut every few iterations keeps plans bounded
-  (``operators.barrier.truncate_lineage`` — ``localCheckpoint`` locally,
-  reliable ``checkpoint()`` when ``SPARK_GRAFT_RELIABLE_CHECKPOINT`` is set
-  or ``reliable=True``, so executor loss on a cluster is survivable); AQE
-  handles skewed hub vertices.
+1. **Local union-find.**  Each edge partition runs a union-find in its own
+   ``mapInPandas`` task (no shuffle, no id hashing) and emits
+   ``(vertex, local_root)``, the local root being the minimum vertex of
+   the vertex's component within that partition.
+2. **Link.**  One ``groupBy(vertex)`` gathers the local roots of each
+   vertex.  A vertex whose edges landed in several partitions links its
+   local roots to their minimum; those links are the *contracted graph*,
+   whose vertices are local roots.
+3. **Resolve.**  The contracted graph is resolved by the same union-find in
+   one task, and every vertex is relabelled with
+   ``coalesce(final_root, local_root)``.
 
-This is the simple variant of the large-star/small-star algorithm —
-appropriate because component diameters here are tiny (≤ ~20 hops).
+The result is exact for any component diameter: no step iterates over
+hops.  The call runs one Spark action, the eager lineage cut of the link
+table (``operators.barrier.truncate_lineage``: ``localCheckpoint``, or a
+reliable ``checkpoint()`` when ``SPARK_GRAFT_RELIABLE_CHECKPOINT`` is set),
+which observes the contracted graph's edge count, so the upstream edge
+plan runs once.  Up to ``MAX_TASK_LINKS`` edges, step 3 runs in one task;
+above it (corpus-scale dedup), step 3 falls back to min-label propagation
+with pointer jumping over the contracted graph only, one convergence check
+per round.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .barrier import truncate_lineage
 
 _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
+# Largest contracted graph (edges) resolved by one union-find task.
+MAX_TASK_LINKS = 1_000_000
+
+
+def _union_find(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``mapInPandas`` body: the components of one partition's ``(a, b)``
+    edges as ``(vertex, root)``, root = minimum vertex of the component."""
+    frames = [f for f in batches if len(f)]
+    if not frames:
+        return
+    pdf = pd.concat(frames, ignore_index=True)
+    m = len(pdf)
+    # sorted codes: the smallest code of a component is its minimum vertex
+    codes, uniq = pd.factorize(
+        np.concatenate([pdf["a"].to_numpy(), pdf["b"].to_numpy()]),
+        sort=True)
+    parent = list(range(len(uniq)))
+    for x, y in zip(codes[:m].tolist(), codes[m:].tolist()):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        while parent[y] != y:
+            parent[y] = parent[parent[y]]
+            y = parent[y]
+        # the larger root hangs under the smaller, so parent[i] <= i
+        if x < y:
+            parent[y] = x
+        elif y < x:
+            parent[x] = y
+    root = np.asarray(parent)
+    while True:
+        up = root[root]
+        if np.array_equal(up, root):
+            break
+        root = up
+    yield pd.DataFrame({"vertex": uniq, "root": uniq[root]})
+
+
+def resolve_in_task(links: DataFrame) -> DataFrame:
+    """Step 3 in one task: ``(vertex, root)`` for every vertex of the
+    ``(a, b)`` link graph, root = minimum vertex of its component."""
+    vtype = dict(links.dtypes)["a"]
+    return links.coalesce(1).mapInPandas(
+        _union_find, f"vertex {vtype}, root {vtype}")
+
+
+def resolve_by_propagation(links: DataFrame,
+                           stats: dict | None = None) -> DataFrame:
+    """Step 3 for a contracted graph too big for one task: min-label
+    propagation over the ``(a, b)`` link graph, each round followed by a
+    pointer jump (``label ← label(label)``), until no label moves.  Same
+    output as ``resolve_in_task``; ``stats["rounds"]`` counts the rounds."""
+    sym = truncate_lineage(
+        links.select("a", "b")
+        .unionByName(links.select(F.col("b").alias("a"),
+                                  F.col("a").alias("b")))
+        .distinct(), eager=False)
+    labels = (sym.groupBy("a").agg(F.min("b").alias("nb"))
+              .select(F.col("a").alias("vertex"),
+                      F.least("a", "nb").alias("root")))
+    rounds = 0
+    while True:
+        rounds += 1
+        nbr = (sym.join(labels, F.col("b") == F.col("vertex"))
+               .groupBy("a").agg(F.min("root").alias("nr")))
+        step = (labels.join(nbr, F.col("vertex") == F.col("a"), "left")
+                .select("vertex", "root",
+                        F.least("root", "nr").alias("hop")))
+        jump = step.select(F.col("vertex").alias("hv"),
+                           F.col("hop").alias("hh"))
+        new = (step.join(jump, F.col("hop") == F.col("hv"), "left")
+               .select("vertex", F.least("hop", "hh").alias("root"),
+                       (F.least("hop", "hh") < F.col("root"))
+                       .alias("moved")))
+        new = truncate_lineage(new, eager=False)
+        labels = new.select("vertex", "root")
+        if new.filter("moved").count() == 0:
+            break
+    if stats is not None:
+        stats["rounds"] = rounds
+    return labels
+
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
-                         max_iterations: int = 50,
-                         checkpoint_interval: int = 3,
-                         reliable: bool | None = None,
-                         shortcut: bool = False,
                          stats: dict | None = None) -> DataFrame:
     """Connected components of an undirected graph.
 
     ``edges``: DataFrame with ``src``/``dst`` columns (isolated vertices may
-    be passed as self-loops).  Returns ``(vertex, component)`` where
-    ``component`` is the minimum vertex id in the component — typed like
-    the input ids (long for integral inputs, string otherwise).
+    be passed as self-loops; a null endpoint is not a vertex).  Returns
+    ``(vertex, component)`` where ``component`` is the minimum vertex id in
+    the component, typed like the input ids (long for integral inputs,
+    string otherwise).
 
     Replaces the reference's recursive per-seed ``visitObject`` walk
-    (SkiAreaClusteringService.ts:705-779) with whole-frontier iteration:
-    every vertex propagates in parallel each round.
-
-    ``shortcut=True`` adds pointer doubling (``c ← min(c, label(c))``)
-    each round: one extra join per round buys O(log diameter) instead of
-    O(diameter) convergence.  Off by default — the engine's graphs (run
-    chains, resort clusters, dedup groups) have single-digit diameters
-    where measured round savings (~1) don't repay the per-round join;
-    flip it for genuinely long-chain graphs (measured A/B at sf0.1:
-    default wins by ~1s on both CC catalog queries, shortcut wins once
-    diameter ≫ rounds-to-converge).
+    (SkiAreaClusteringService.ts:705-779) and its ``PointGraph`` chain walk.
+    ``stats["iterations"]`` is set to the contraction rounds run: 1, plus
+    the propagation rounds of the fallback resolver when it runs.
     """
     dtypes = dict(edges.dtypes)
-    numeric = dtypes[src] in _INTEGRAL and dtypes[dst] in _INTEGRAL
+    vtype = ("bigint" if dtypes[src] in _INTEGRAL and dtypes[dst] in _INTEGRAL
+             else "string")
+    a, b = F.col(src).cast(vtype), F.col(dst).cast(vtype)
+    pairs = (edges.select(F.coalesce(a, b).alias("a"),
+                          F.coalesce(b, a).alias("b"))
+             .filter(F.col("a").isNotNull()))
 
-    if numeric:
-        ids = edges.select(F.col(src).cast("long").alias("a"),
-                           F.col(dst).cast("long").alias("b"))
-        vocab = None
-    else:
-        e = edges.select(F.col(src).cast("string").alias("sa"),
-                         F.col(dst).cast("string").alias("sb"))
-        ids = e.select(F.xxhash64("sa").alias("a"), F.xxhash64("sb").alias("b"))
-        vocab = (e.select(F.xxhash64("sa").alias("vid"),
-                          F.col("sa").alias("vertex"))
-                 .unionByName(e.select(F.xxhash64("sb").alias("vid"),
-                                       F.col("sb").alias("vertex")))
-                 .distinct())
+    local = pairs.mapInPandas(_union_find, f"vertex {vtype}, root {vtype}")
+    # the one Spark action: the eager cut, observing the contracted
+    # graph's size (every local root but the minimum is one link)
+    size = Observation()
+    per_vertex = truncate_lineage(
+        local.groupBy("vertex")
+        .agg(F.min("root").alias("root"),
+             F.collect_set("root").alias("roots"))
+        .observe(size, F.sum(F.size("roots") - 1).alias("links")))
+    n_links = size.get["links"] or 0
+    links = per_vertex.select(
+        F.explode(F.array_remove("roots", F.col("root"))).alias("a"),
+        F.col("root").alias("b"))
 
-    # Lazy lineage cut: the first round's convergence action materializes
-    # sym inside its own job instead of a separate synchronous job here.
-    sym = truncate_lineage(
-        ids.unionByName(ids.select(F.col("b").alias("a"),
-                                   F.col("a").alias("b"))).distinct(),
-        eager=False, reliable=reliable)
-    # labels derive from the (checkpoint-cached) sym — no extra job
-    labels = (sym.select(F.col("a").alias("v")).distinct()
-              .withColumn("c", F.col("v")))
-
-    prev_sum, prev_cached = None, None
-    for i in range(max_iterations):
-        nbr = (sym.join(labels, sym["b"] == labels["v"])
-               .groupBy("a").agg(F.min("c").alias("nc")))
-        new_labels = (
-            labels.join(nbr, labels["v"] == nbr["a"], "left")
-            .select(labels["v"], F.least(labels["c"], F.col("nc")).alias("c")))
-        if shortcut:
-            # pointer doubling: c ← min(c, label(c)) reaches 2^i hops by
-            # round i — O(log diameter) rounds for long chains.
-            lut = new_labels.select(F.col("v").alias("lv"),
-                                    F.col("c").alias("lc"))
-            new_labels = (
-                new_labels.join(lut, new_labels["c"] == lut["lv"], "left")
-                .select(new_labels["v"],
-                        F.least(new_labels["c"], F.col("lc")).alias("c")))
-        we_persisted = False
-        if (i + 1) % checkpoint_interval == 0:
-            new_labels = truncate_lineage(new_labels, reliable=reliable)
+    rounds = 1
+    out = per_vertex.select("vertex", F.col("root").alias("component"))
+    if n_links:
+        if n_links <= MAX_TASK_LINKS:
+            final = resolve_in_task(links)
         else:
-            # lazy cache: the convergence action below materializes this
-            # round exactly once; the next round then starts from the cache
-            # instead of replaying every join since the last lineage cut.
-            # Lineage is retained, so eviction/executor loss recomputes.
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-            we_persisted = True
-        cur_sum = new_labels.agg(
-            F.sum(F.col("c").cast("decimal(38,0)"))).first()[0]
-        if prev_cached is not None:
-            # only frames *we* persisted — never a checkpointed frame,
-            # whose truncated lineage cannot rebuild dropped blocks
-            prev_cached.unpersist()
-        prev_cached = new_labels if we_persisted else None
-        labels = new_labels
-        if stats is not None:
-            stats["iterations"] = i + 1
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-
-    if numeric:
-        return labels.select(F.col("v").alias("vertex"),
-                             F.col("c").alias("component"))
-
-    # Recover string labels; canonical component = min vertex string.
-    resolved = (labels.join(vocab, labels["v"] == vocab["vid"])
-                .select(F.col("vertex"), F.col("c")))
-    canon = (resolved.groupBy("c").agg(F.min("vertex").alias("component")))
-    return resolved.join(canon, "c").select("vertex", "component")
+            prop: dict = {}
+            final = resolve_by_propagation(links, prop)
+            rounds += prop["rounds"]
+        final = final.select(F.col("vertex").alias("root"),
+                             F.col("root").alias("final"))
+        out = (per_vertex.join(final, "root", "left")
+               .select("vertex",
+                       F.coalesce("final", "root").alias("component")))
+    if stats is not None:
+        stats["iterations"] = rounds
+    return out

@@ -20,8 +20,10 @@ Reference semantics (src/clustering/SkiAreaClusteringService.ts:337-447):
 
 The per-seed recursion (visitObject, :705-779) becomes per-activity
 connected components over the 500 m spatial graph: every "claim" pass is
-one grid-bucketed distance self-join + label propagation instead of one
-SQL round-trip per object.  A lazy lineage cut between passes
+one grid-bucketed distance self-join + one ``operators.graph`` call (a
+partition-local union-find, one link shuffle, the contracted graph
+resolved in one task up to ``MAX_TASK_LINKS`` links) instead of one SQL
+round-trip per object.  A lazy lineage cut between passes
 (``operators.barrier.truncate_lineage`` — reliable ``checkpoint()`` on a
 cluster when ``SPARK_GRAFT_RELIABLE_CHECKPOINT`` is set) keeps plans
 bounded.
@@ -33,8 +35,9 @@ generated ski-area ids are content hashes of the member set instead of
 random UUIDs (deterministic across runs — a distributed-engine
 requirement).
 
-At 100 TB scale: all passes shuffle on grid cells / object ids; the only
-iterative piece is CC with its bounded rounds; per-ski-area python work
+At 100 TB scale: all passes shuffle on grid cells / object ids; CC is
+iterative only when its contracted graph exceeds one task (label
+propagation over that graph alone); per-ski-area python work
 (geometry collections) runs in Arrow-batched UDFs over member arrays.
 """
 
@@ -376,8 +379,8 @@ def _transitive_claim(sas: DataFrame, objs: DataFrame, source: str) -> DataFrame
 
     # One CC over the union of the per-activity graphs: vertices are
     # "activity|id" so downhill and nordic chains never mix (the
-    # activity-narrowing of visitObject's traversal), yet a single label
-    # propagation covers both — half the iterative jobs.
+    # activity-narrowing of visitObject's traversal), yet a single CC call
+    # covers both.
     def act_nodes(act):
         act_seeds = seeds.filter(
             F.array_contains("activities", act) | (F.size("activities") == 0))

@@ -2,8 +2,44 @@
 
 from __future__ import annotations
 
+import random
 
+import pytest
+
+from openskidata_processor_spark.operators import graph
 from openskidata_processor_spark.operators.graph import connected_components
+
+
+def reference_components(pairs):
+    """Pure-Python union-find: vertex -> minimum vertex of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
+def random_graph(seed, n_vertices=400, n_edges=300, chain=300):
+    """Random sparse edges plus a shuffled ``chain``-hop path, as ints."""
+    rng = random.Random(seed)
+    pairs = [(rng.randrange(n_vertices), rng.randrange(n_vertices))
+             for _ in range(n_edges)]
+    base = 10_000
+    nodes = list(range(base, base + chain + 1))
+    rng.shuffle(nodes)
+    pairs += list(zip(nodes, nodes[1:]))
+    pairs += [(v, v) for v in range(base + 5_000, base + 5_010)]
+    rng.shuffle(pairs)
+    return pairs
 
 
 def test_connected_components_basic(spark):
@@ -16,36 +52,81 @@ def test_connected_components_basic(spark):
                    "d": "d", "e": "d", "f": "f"}
 
 
-def test_connected_components_chain_converges(spark):
-    # a 12-hop path exercises multiple propagation rounds + checkpoints
-    names = [f"v{i:02d}" for i in range(13)]
+@pytest.mark.parametrize("vtype", ["long", "string"])
+def test_connected_components_long_chain_is_one_component(spark, vtype):
+    """A 300-hop path over many partitions is one component whatever the
+    chain length, in both id types."""
+    names = list(range(301)) if vtype == "long" else \
+        [f"v{i:03d}" for i in range(301)]
     edges = spark.createDataFrame(
-        list(zip(names, names[1:])), "src string, dst string")
+        list(zip(names, names[1:])), f"src {vtype}, dst {vtype}"
+    ).repartition(16)
+    stats = {}
     out = {r.vertex: r.component
+           for r in connected_components(edges, stats=stats).collect()}
+    assert set(out.values()) == {names[0]}
+    assert len(out) == 301
+    assert stats["iterations"] == 1
+
+
+@pytest.mark.parametrize("vtype", ["long", "string"])
+@pytest.mark.parametrize("seed", [1, 2])
+def test_connected_components_match_reference_union_find(spark, vtype, seed):
+    """Exact against a pure-Python union-find on random graphs with a
+    shuffled long chain, edges spread over 16 partitions."""
+    pairs = random_graph(seed)
+    if vtype == "string":
+        # zero-padded so string order is numeric order
+        pairs = [(f"{a:06d}", f"{b:06d}") for a, b in pairs]
+    edges = spark.createDataFrame(
+        pairs, f"src {vtype}, dst {vtype}").repartition(16)
+    got = {r.vertex: r.component
            for r in connected_components(edges).collect()}
-    assert set(out.values()) == {"v00"}
-    assert len(out) == 13
+    assert got == reference_components(pairs)
 
 
-def test_connected_components_reliable_checkpoint_mode(spark, tmp_path):
-    """Cluster-durable mode: same answers with a reliable ``checkpoint()``
-    barrier (survives executor loss at 100 TB, unlike localCheckpoint)."""
-    import os
+def test_connected_components_empty_and_self_loops(spark):
+    empty = spark.createDataFrame([], "src long, dst long")
+    out = connected_components(empty)
+    assert dict(out.dtypes) == {"vertex": "bigint", "component": "bigint"}
+    assert out.collect() == []
+    loops = spark.createDataFrame(
+        [(v, v) for v in (3, 1, 2)], "src long, dst long").repartition(3)
+    got = {r.vertex: r.component
+           for r in connected_components(loops).collect()}
+    assert got == {1: 1, 2: 2, 3: 3}
 
-    os.environ["SPARK_GRAFT_CHECKPOINT_DIR"] = str(tmp_path / "ckpt")
-    try:
-        names = [f"v{i:02d}" for i in range(13)]
-        edges = spark.createDataFrame(
-            list(zip(names, names[1:])), "src string, dst string")
-        out = {r.vertex: r.component
-               for r in connected_components(edges, reliable=True).collect()}
-        assert set(out.values()) == {"v00"}
-        assert len(out) == 13
-        # the reliable barrier must actually have written checkpoint data
-        ckpt = spark.sparkContext.getCheckpointDir()
-        assert ckpt is not None
-    finally:
-        os.environ.pop("SPARK_GRAFT_CHECKPOINT_DIR", None)
+
+@pytest.mark.parametrize("vtype", ["long", "string"])
+def test_propagation_resolver_matches_reference(spark, vtype):
+    """The step-3 fallback, called directly on a link graph: same answer as
+    the in-task resolver and the reference union-find."""
+    pairs = random_graph(3, n_vertices=60, n_edges=50, chain=40)
+    if vtype == "string":
+        pairs = [(f"{a:06d}", f"{b:06d}") for a, b in pairs]
+    links = spark.createDataFrame(
+        pairs, f"a {vtype}, b {vtype}").repartition(4)
+    want = reference_components(pairs)
+    stats = {}
+    fallback = {r.vertex: r.root for r in
+                graph.resolve_by_propagation(links, stats).collect()}
+    in_task = {r.vertex: r.root for r in
+               graph.resolve_in_task(links).collect()}
+    assert fallback == in_task == want
+    assert stats["rounds"] >= 1
+
+
+def test_connected_components_fallback_path(spark, monkeypatch):
+    """With every contracted graph over the one-task limit, the call
+    resolves through the propagation fallback and stays exact."""
+    monkeypatch.setattr(graph, "MAX_TASK_LINKS", 0)
+    pairs = random_graph(4, n_vertices=60, n_edges=50, chain=40)
+    edges = spark.createDataFrame(pairs, "src long, dst long").repartition(8)
+    stats = {}
+    got = {r.vertex: r.component
+           for r in connected_components(edges, stats=stats).collect()}
+    assert got == reference_components(pairs)
+    assert stats["iterations"] > 1
 
 
 def test_materialize_is_lazy(spark):
@@ -64,8 +145,8 @@ def test_materialize_is_lazy(spark):
 
 
 def test_connected_components_numeric_fast_path(spark):
-    """Integral vertex ids take the no-hash path: output columns are
-    longs and the component is the numeric minimum (not a string min)."""
+    """Integral vertex ids stay longs: output columns are longs and the
+    component is the numeric minimum (not a string min)."""
     edges = spark.createDataFrame(
         [(2, 10), (10, 3), (7, 7)], "src long, dst long")
     out = connected_components(edges)
@@ -92,15 +173,3 @@ def test_connected_components_numeric_matches_string_semantics(spark):
         s_groups.setdefault(r.component, set()).add(int(r.vertex))
     assert sorted(map(sorted, num_groups.values())) == \
         sorted(map(sorted, s_groups.values()))
-
-
-def test_connected_components_shortcut_same_result(spark):
-    """Pointer-doubling mode returns identical components on a chain."""
-    chain = [(i, i + 1) for i in range(12)]
-    base = {(r.vertex, r.component) for r in connected_components(
-        spark.createDataFrame(chain, "src long, dst long")).collect()}
-    fast = {(r.vertex, r.component) for r in connected_components(
-        spark.createDataFrame(chain, "src long, dst long"),
-        shortcut=True).collect()}
-    assert base == fast
-    assert all(c == 0 for _, c in base)

@@ -303,3 +303,16 @@ def test_normalization_output_independent_of_partitioning(spark):
     b = run_with(runs.repartition(7, F.col("geometry")))
     c = run_with(runs.orderBy(F.desc("geometry")).repartition(3))
     assert a == b == c
+
+
+def test_long_linestring_normalizes_to_one_run(spark):
+    """PointGraph chains any number of segments: a 120-node LineString is
+    one 119-segment chain and must come back as ONE run carrying all 120
+    coordinates, in order."""
+    nodes = [(100.0 + i * 0.001, 47.0 + (i % 7) * 0.001) for i in range(120)]
+    runs = fmt.format_runs(raw(spark, [
+        ({"piste:type": "nordic", "name": "Long"}, line(*nodes))]))
+    out = normalize_runs(runs).collect()
+    assert len(out) == 1
+    coords = json.loads(out[0].geometry)["coordinates"]
+    assert [tuple(c) for c in coords] == nodes
