@@ -345,9 +345,8 @@ def near_dup_groups(df: DataFrame, id_col: str, pairs: DataFrame,
     exists.  Documents in no pair are their own group with ``keep=true``.
 
     Ids must be integers — the CC operator keeps them as 8-byte longs end
-    to end (no string padding).  At corpus scale a contracted graph above
-    ``operators.graph.MAX_TASK_LINKS`` links resolves by label propagation
-    over that graph instead of in one task.
+    to end (no string padding).  The CC's contracted graph (cross-partition
+    links) is resolved in one task; ``operators.graph`` states its bound.
     The keep-best pass adds one map-side-combining aggregate over the
     group table (group-count-sized) and one join back — both bounded by
     the corpus, no quadratic stage.

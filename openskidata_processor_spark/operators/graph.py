@@ -17,17 +17,20 @@ three steps:
    whose vertices are local roots.
 3. **Resolve.**  The contracted graph is resolved by the same union-find in
    one task, and every vertex is relabelled with
-   ``coalesce(final_root, local_root)``.
+   ``coalesce(final_root, local_root)`` by a window over its local root.
 
 The result is exact for any component diameter: no step iterates over
-hops.  The call runs one Spark action, the eager lineage cut of the link
-table (``operators.barrier.truncate_lineage``: ``localCheckpoint``, or a
-reliable ``checkpoint()`` when ``SPARK_GRAFT_RELIABLE_CHECKPOINT`` is set),
-which observes the contracted graph's edge count, so the upstream edge
-plan runs once.  Up to ``MAX_TASK_LINKS`` edges, step 3 runs in one task;
-above it (corpus-scale dedup), step 3 falls back to min-label propagation
-with pointer jumping over the contracted graph only, one convergence check
-per round.
+hops, and the call runs no action of its own.  The per-vertex table feeds
+both step 3 and the relabel, so it is a lazy lineage cut
+(``operators.barrier.truncate_lineage``: ``localCheckpoint``, or a
+reliable ``checkpoint()`` when ``SPARK_GRAFT_RELIABLE_CHECKPOINT`` is set)
+and the upstream edge plan runs once.  Under adaptive execution, making
+the cut runs the edge plan's shuffle stages, the link shuffle included,
+at call time; the rest runs at the caller's first action.
+
+Step 3's size bound: one task holds the contracted graph, which has one
+link for each extra edge partition a vertex appears in: fewer than two
+links per edge, and at most ``partitions - 1`` per vertex.
 """
 
 from __future__ import annotations
@@ -37,15 +40,13 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .barrier import truncate_lineage
 
 _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
-
-# Largest contracted graph (edges) resolved by one union-find task.
-MAX_TASK_LINKS = 1_000_000
 
 
 def _union_find(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -82,51 +83,6 @@ def _union_find(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     yield pd.DataFrame({"vertex": uniq, "root": uniq[root]})
 
 
-def resolve_in_task(links: DataFrame) -> DataFrame:
-    """Step 3 in one task: ``(vertex, root)`` for every vertex of the
-    ``(a, b)`` link graph, root = minimum vertex of its component."""
-    vtype = dict(links.dtypes)["a"]
-    return links.coalesce(1).mapInPandas(
-        _union_find, f"vertex {vtype}, root {vtype}")
-
-
-def resolve_by_propagation(links: DataFrame,
-                           stats: dict | None = None) -> DataFrame:
-    """Step 3 for a contracted graph too big for one task: min-label
-    propagation over the ``(a, b)`` link graph, each round followed by a
-    pointer jump (``label ← label(label)``), until no label moves.  Same
-    output as ``resolve_in_task``; ``stats["rounds"]`` counts the rounds."""
-    sym = truncate_lineage(
-        links.select("a", "b")
-        .unionByName(links.select(F.col("b").alias("a"),
-                                  F.col("a").alias("b")))
-        .distinct(), eager=False)
-    labels = (sym.groupBy("a").agg(F.min("b").alias("nb"))
-              .select(F.col("a").alias("vertex"),
-                      F.least("a", "nb").alias("root")))
-    rounds = 0
-    while True:
-        rounds += 1
-        nbr = (sym.join(labels, F.col("b") == F.col("vertex"))
-               .groupBy("a").agg(F.min("root").alias("nr")))
-        step = (labels.join(nbr, F.col("vertex") == F.col("a"), "left")
-                .select("vertex", "root",
-                        F.least("root", "nr").alias("hop")))
-        jump = step.select(F.col("vertex").alias("hv"),
-                           F.col("hop").alias("hh"))
-        new = (step.join(jump, F.col("hop") == F.col("hv"), "left")
-               .select("vertex", F.least("hop", "hh").alias("root"),
-                       (F.least("hop", "hh") < F.col("root"))
-                       .alias("moved")))
-        new = truncate_lineage(new, eager=False)
-        labels = new.select("vertex", "root")
-        if new.filter("moved").count() == 0:
-            break
-    if stats is not None:
-        stats["rounds"] = rounds
-    return labels
-
-
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                          stats: dict | None = None) -> DataFrame:
     """Connected components of an undirected graph.
@@ -139,8 +95,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
 
     Replaces the reference's recursive per-seed ``visitObject`` walk
     (SkiAreaClusteringService.ts:705-779) and its ``PointGraph`` chain walk.
-    ``stats["iterations"]`` is set to the contraction rounds run: 1, plus
-    the propagation rounds of the fallback resolver when it runs.
+    ``stats["iterations"]`` is set to the contraction rounds run (always 1).
     """
     dtypes = dict(edges.dtypes)
     vtype = ("bigint" if dtypes[src] in _INTEGRAL and dtypes[dst] in _INTEGRAL
@@ -151,33 +106,28 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
              .filter(F.col("a").isNotNull()))
 
     local = pairs.mapInPandas(_union_find, f"vertex {vtype}, root {vtype}")
-    # the one Spark action: the eager cut, observing the contracted
-    # graph's size (every local root but the minimum is one link)
-    size = Observation()
     per_vertex = truncate_lineage(
         local.groupBy("vertex")
         .agg(F.min("root").alias("root"),
-             F.collect_set("root").alias("roots"))
-        .observe(size, F.sum(F.size("roots") - 1).alias("links")))
-    n_links = size.get["links"] or 0
+             F.collect_set("root").alias("roots")), eager=False)
+    # every local root but the vertex's minimum is one contracted edge
     links = per_vertex.select(
         F.explode(F.array_remove("roots", F.col("root"))).alias("a"),
         F.col("root").alias("b"))
-
-    rounds = 1
-    out = per_vertex.select("vertex", F.col("root").alias("component"))
-    if n_links:
-        if n_links <= MAX_TASK_LINKS:
-            final = resolve_in_task(links)
-        else:
-            prop: dict = {}
-            final = resolve_by_propagation(links, prop)
-            rounds += prop["rounds"]
-        final = final.select(F.col("vertex").alias("root"),
-                             F.col("root").alias("final"))
-        out = (per_vertex.join(final, "root", "left")
-               .select("vertex",
-                       F.coalesce("final", "root").alias("component")))
+    final = (links.coalesce(1)
+             .mapInPandas(_union_find, f"vertex {vtype}, root {vtype}")
+             .select(F.col("vertex").alias("root"),
+                     F.lit(None).cast(vtype).alias("vertex"),
+                     F.col("root").alias("final")))
     if stats is not None:
-        stats["iterations"] = rounds
-    return out
+        stats["iterations"] = 1
+    # relabel by a union and a window over the local root, not a join: a
+    # join's size estimate is the product of its sides' estimates, and
+    # callers chain several calls through further joins
+    by_root = Window.partitionBy("root")
+    return (per_vertex.select("root", "vertex",
+                              F.lit(None).cast(vtype).alias("final"))
+            .unionByName(final)
+            .select("vertex", F.coalesce(F.min("final").over(by_root),
+                                         F.col("root")).alias("component"))
+            .filter(F.col("vertex").isNotNull()))

@@ -22,11 +22,10 @@ The per-seed recursion (visitObject, :705-779) becomes per-activity
 connected components over the 500 m spatial graph: every "claim" pass is
 one grid-bucketed distance self-join + one ``operators.graph`` call (a
 partition-local union-find, one link shuffle, the contracted graph
-resolved in one task up to ``MAX_TASK_LINKS`` links) instead of one SQL
-round-trip per object.  A lazy lineage cut between passes
-(``operators.barrier.truncate_lineage`` — reliable ``checkpoint()`` on a
-cluster when ``SPARK_GRAFT_RELIABLE_CHECKPOINT`` is set) keeps plans
-bounded.
+resolved in one task) instead of one SQL round-trip per object.  A lazy
+lineage cut between passes (``operators.barrier.truncate_lineage`` —
+reliable ``checkpoint()`` on a cluster when
+``SPARK_GRAFT_RELIABLE_CHECKPOINT`` is set) keeps plans bounded.
 
 Documented deviations from the sequential reference (the integration
 suite's scenarios still hold): contested transitive claims resolve to the
@@ -35,9 +34,9 @@ generated ski-area ids are content hashes of the member set instead of
 random UUIDs (deterministic across runs — a distributed-engine
 requirement).
 
-At 100 TB scale: all passes shuffle on grid cells / object ids; CC is
-iterative only when its contracted graph exceeds one task (label
-propagation over that graph alone); per-ski-area python work
+At 100 TB scale: all passes shuffle on grid cells / object ids; CC never
+iterates, but its contracted graph (cross-partition links, fewer than two
+per edge) must fit one task; per-ski-area python work
 (geometry collections) runs in Arrow-batched UDFs over member arrays.
 """
 

@@ -646,8 +646,8 @@ def cc_components(spark, sf_dir):
     """Connected components over a deterministic supplier graph (edges:
     same nation, key distance ≤ 3) using the engine's union-find operator
     (per-partition union-find, one link shuffle, the contracted graph
-    resolved in one task up to ``MAX_TASK_LINKS`` links) — the distributed
-    replacement for the reference's recursive visitObject expansion.
+    resolved in one task) — the distributed replacement for the
+    reference's recursive visitObject expansion.
     Vertex ids are zero-padded so the canonical min-label agrees with the
     SQL oracle's numeric ordering."""
     from ..operators.graph import connected_components

@@ -6,7 +6,6 @@ import random
 
 import pytest
 
-from openskidata_processor_spark.operators import graph
 from openskidata_processor_spark.operators.graph import connected_components
 
 
@@ -97,36 +96,69 @@ def test_connected_components_empty_and_self_loops(spark):
     assert got == {1: 1, 2: 2, 3: 3}
 
 
-@pytest.mark.parametrize("vtype", ["long", "string"])
-def test_propagation_resolver_matches_reference(spark, vtype):
-    """The step-3 fallback, called directly on a link graph: same answer as
-    the in-task resolver and the reference union-find."""
-    pairs = random_graph(3, n_vertices=60, n_edges=50, chain=40)
-    if vtype == "string":
-        pairs = [(f"{a:06d}", f"{b:06d}") for a, b in pairs]
-    links = spark.createDataFrame(
-        pairs, f"a {vtype}, b {vtype}").repartition(4)
-    want = reference_components(pairs)
-    stats = {}
-    fallback = {r.vertex: r.root for r in
-                graph.resolve_by_propagation(links, stats).collect()}
-    in_task = {r.vertex: r.root for r in
-               graph.resolve_in_task(links).collect()}
-    assert fallback == in_task == want
-    assert stats["rounds"] >= 1
+def test_connected_components_reliable_checkpoint_mode(spark, monkeypatch,
+                                                       tmp_path):
+    """Cluster-durable mode: with ``SPARK_GRAFT_RELIABLE_CHECKPOINT`` set,
+    the per-vertex cut is a reliable ``checkpoint()`` that writes files,
+    and a 300-hop chain is still one component."""
+    import os
+
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ckpt"))
+
+    def written():
+        d = spark.sparkContext.getCheckpointDir()
+        if d is None:
+            return set()
+        root = d.removeprefix("file:")
+        return {os.path.join(p, f)
+                for p, _, fs in os.walk(root) for f in fs}
+
+    before = written()
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(300)], "src long, dst long"
+    ).repartition(16)
+    out = {r.vertex: r.component
+           for r in connected_components(edges).collect()}
+    assert set(out.values()) == {0}
+    assert len(out) == 301
+    assert written() - before
 
 
-def test_connected_components_fallback_path(spark, monkeypatch):
-    """With every contracted graph over the one-task limit, the call
-    resolves through the propagation fallback and stays exact."""
-    monkeypatch.setattr(graph, "MAX_TASK_LINKS", 0)
-    pairs = random_graph(4, n_vertices=60, n_edges=50, chain=40)
-    edges = spark.createDataFrame(pairs, "src long, dst long").repartition(8)
-    stats = {}
-    got = {r.vertex: r.component
-           for r in connected_components(edges, stats=stats).collect()}
-    assert got == reference_components(pairs)
-    assert stats["iterations"] > 1
+def test_connected_components_reads_edges_once(spark):
+    """The per-vertex table is a lineage cut: the edge plan runs once,
+    however many actions read the result."""
+    from pyspark.sql import functions as F
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(_):
+        seen.add(1)
+        return True
+
+    edges = (spark.range(0, 50, numPartitions=4)
+             .filter(F.udf(count_row, "boolean")("id"))
+             .select(F.col("id").alias("src"),
+                     (F.col("id") + 1).alias("dst")))
+    out = connected_components(edges)
+    assert [r.component for r in out.select("component").distinct()
+            .collect()] == [0]
+    assert out.count() == 51
+    assert seen.value == 50
+
+
+def test_connected_components_keeps_size_estimate_linear(spark):
+    """The optimizer's size estimate of the result stays a small multiple
+    of the edges' estimate.  A join estimates the product of its sides, so
+    a join-based relabel squared it per call and chained calls stalled the
+    planner in big-integer arithmetic."""
+    def estimate(df):
+        return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(200)], "src long, dst long")
+    out = connected_components(edges)
+    assert estimate(out) < 10 * estimate(edges)
 
 
 def test_materialize_is_lazy(spark):
