@@ -5,13 +5,14 @@
 
 .PHONY: check test test-driver-tier bench driver-sim window-check
 
-# Fast regression gate (~2.5 min): formatter semantics + ANSI edge probes +
-# golden sha256-pinned end-to-end artifacts + the driver-window contract
-# (window stays 50 oracle-backed entries; a broken registration would
-# silently shrink the external hard signal).
+# Fast regression gate (~5 min on 4 cores): formatter semantics + ANSI edge probes +
+# golden sha256-pinned end-to-end artifacts + each prepare() UDF running
+# once per row + the driver-window contract (window stays 50 oracle-backed
+# entries; a broken registration would silently shrink the external hard
+# signal).
 check:
 	python -m pytest tests/test_ansi_edges.py tests/test_formatters.py \
-	    tests/test_golden_outputs.py \
+	    tests/test_golden_outputs.py tests/test_prepare_udf_once.py \
 	    tests/test_oracle_parity.py::test_driver_window_is_all_oracle_backed -q
 
 # FULL suite (~39 min on the r13 host): driver tier + the full-tier

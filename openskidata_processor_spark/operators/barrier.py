@@ -14,9 +14,15 @@ Two distinct needs, two helpers:
 
 - ``truncate_lineage(df)`` — cut the logical plan inside iterative
   algorithms (connected components) where plan growth, not reuse, is the
-  problem.  Locally this is ``localCheckpoint`` (fast, executor-memory);
-  with reliable mode on it becomes a real ``checkpoint()`` to the
-  configured checkpoint directory, which survives executor loss.
+  problem.  It is also the fan-out barrier for pandas-UDF outputs: a
+  frame whose Python UDFs feed several branches (a formatted layer read
+  by the site join and by normalization, the merged segment table of run
+  normalization) is cut eagerly once, so each UDF runs once per row
+  instead of once per branch — AQE plans those branches as independent
+  stages, and a lazy ``persist`` would be filled by each of them.
+  Locally this is ``localCheckpoint`` (fast, executor-memory); with
+  reliable mode on it becomes a real ``checkpoint()`` to the configured
+  checkpoint directory, which survives executor loss.
 
 Reliable mode is enabled per-call (``reliable=True``) or globally with
 ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1``; the checkpoint directory defaults to
@@ -99,7 +105,8 @@ def spread_input(df: DataFrame) -> DataFrame:
 def truncate_lineage(df: DataFrame, eager: bool = True,
                      reliable: bool | None = None) -> DataFrame:
     """Lineage cut for iterative loops / staged pipelines (plans must stay
-    bounded).  ``eager=False`` defers materialization to the first action."""
+    bounded) and for UDF outputs read by several branches.
+    ``eager=False`` defers materialization to the first action."""
     if _reliable_mode(reliable):
         _ensure_checkpoint_dir(df)
         return df.checkpoint(eager=eager)

@@ -30,8 +30,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..functions import osm
-from ..functions.geometry import centroid_udf, geometry_valid_udf
+from ..functions.geometry import (centroid_udf, geometry_valid,
+                                  geometry_valid_udf)
 from ..functions.hashing import feature_id
+from ..operators.barrier import truncate_lineage
 
 # Published openskidata-format enum domains.
 RUN_USES = ("downhill", "nordic", "skitour", "sled", "hike", "sleigh",
@@ -94,12 +96,16 @@ def run_difficulty_convention(geometry_json: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 @F.pandas_udf(ArrayType(StringType()))
-def split_multi_geometry_udf(geojson: pd.Series) -> pd.Series:
-    """1→N split of Multi* geometries into canonical single-geometry JSON
-    (compact separators, preserved coordinate order) — explode the result.
-    Single geometries pass through re-canonicalized, so feature ids hash
-    identical bytes for equal geometries."""
+def valid_geometry_parts_udf(geojson: pd.Series) -> pd.Series:
+    """P8 validity and the 1→N split of Multi* geometries in one Arrow
+    pass — explode the result.  An invalid geometry has no parts, so the
+    explode drops its row as the validity filter would.  Parts are
+    canonical single-geometry JSON (compact separators, preserved
+    coordinate order); single geometries pass through re-canonicalized,
+    so feature ids hash identical bytes for equal geometries."""
     def split(s):
+        if not geometry_valid(s):
+            return []
         g = json.loads(s)
         t = g.get("type")
         if t == "MultiPolygon":
@@ -124,7 +130,8 @@ def format_runs(df: DataFrame) -> DataFrame:
 
     Drops: Point geometry, invalid geometry, no recognized uses, status not
     "operating" (incl. the ``piste:abandoned=yes`` special case).
-    Splits Multi* geometries into one feature per part (shared properties).
+    Splits Multi* geometries into one feature per part (shared properties);
+    the invalid-geometry drop happens in that split's explode.
     """
     tags = F.col("tags")
     status, piste_type = osm.status_and_value(tags, "piste:type")
@@ -172,7 +179,6 @@ def format_runs(df: DataFrame) -> DataFrame:
         .filter(geom_type != "Point")
         .filter(F.size(F.col("uses")) > 0)
         .filter(F.col("__status") == "operating")
-        .filter(geometry_valid_udf(F.col("geometry")))
     )
 
     # Tag-derived properties are computed BEFORE the Multi*-split: they
@@ -211,7 +217,7 @@ def format_runs(df: DataFrame) -> DataFrame:
     )
 
     exploded = pre.withColumn(
-        "geometry", F.explode(split_multi_geometry_udf(F.col("geometry"))))
+        "geometry", F.explode(valid_geometry_parts_udf(F.col("geometry"))))
 
     return exploded.select(
         feature_id(F.lit("run"), F.col("geometry")).alias("id"),
@@ -402,9 +408,9 @@ def format_ski_areas(osm_landuse: DataFrame, sites: DataFrame,
 def format_spots(df: DataFrame) -> DataFrame:
     """InputSpotFeature → spot layer (SpotFormatter.ts:30-192): geometry →
     centroid Point; five independent subtype extractors, unioned — a
-    feature can emit several spots."""
+    feature can emit several spots.  The centroid and the id hash run
+    once, after the union, so each spot row crosses into Python once."""
     tags = F.col("tags")
-    base = df.withColumn("geometry", centroid_udf(F.col("geometry")))
 
     def spot(filter_cond: Column, spot_type: str, **extra: Column) -> DataFrame:
         cols = {
@@ -416,8 +422,7 @@ def format_spots(df: DataFrame) -> DataFrame:
             "exit": F.lit(None).cast("boolean"),
         }
         cols.update(extra)
-        return base.filter(filter_cond).select(
-            feature_id(F.lit("spot"), F.col("geometry")).alias("id"),
+        return df.filter(filter_cond).select(
             F.lit("spot").alias("feature_type"),
             F.lit(spot_type).alias("spot_type"),
             cols["dismount"].alias("dismount"),
@@ -456,8 +461,12 @@ def format_spots(df: DataFrame) -> DataFrame:
                       "avalanche_transceiver_checkpoint")
     halfpipe = spot(osm.tag(tags, "man_made") == "piste:halfpipe", "halfpipe")
 
-    return (crossing.unionByName(lift_station).unionByName(training)
-            .unionByName(checkpoint).unionByName(halfpipe))
+    spots = (crossing.unionByName(lift_station).unionByName(training)
+             .unionByName(checkpoint).unionByName(halfpipe)
+             .withColumn("geometry", centroid_udf(F.col("geometry"))))
+    return spots.select(
+        feature_id(F.lit("spot"), F.col("geometry")).alias("id"),
+        *spots.columns)
 
 
 # ---------------------------------------------------------------------------
@@ -482,8 +491,13 @@ def attach_site_ski_areas(layer: DataFrame, sites: DataFrame,
     ref, role>>``; ``site_ski_areas`` is the formatted site layer (ids are
     content hashes of the placeholder geometry).  Membership is a broadcast
     equi-join on the member osm ref — the site table is tiny relative to
-    the feature layers."""
-    site_ids = format_ski_areas_sites(sites).select(
+    the feature layers.
+
+    ``layer`` is read twice here (the source explode and the join back)
+    and again by every consumer of the result, so it is cut first: its
+    formatter UDFs run once per feature, not once per reader."""
+    layer = truncate_lineage(layer)
+    site_ids = site_ski_areas.select(
         F.col("id").alias("__site_feature_id"),
         # F.get: formatters always emit >= 1 source, but a violated
         # invariant must surface as a null join-miss, not an ANSI throw

@@ -22,7 +22,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..functions import osm as osm_fns
 from ..operators.barrier import truncate_lineage
@@ -46,8 +47,27 @@ def prepare(spark: SparkSession,
 
     ``*_raw`` inputs are bronze rows (osm_type, osm_id, tags, geometry) —
     either read from parquet or produced by ``assemble_osm_features``.
+
+    Each Python UDF runs once per row because every frame read by more
+    than one branch is materialized where it fans out:
+    - ``formatters.attach_site_ski_areas`` cuts each formatted layer
+      (runs, lifts, spots) before its two reads and its consumers;
+    - ``run_normalization.combine_segments`` cuts the merged segment
+      table before its five branches;
+    - the phase checkpoints below (``intermediate_*``, elevation,
+      ``output_*``) bound the plans between phases.
+    The phase checkpoints of the four layers that reach clustering also
+    observe their row counts; their sum is ``cluster_ski_areas``'
+    hot-cell gate.
     """
-    def checkpoint(df: DataFrame, name: str) -> DataFrame:
+    observed: dict[str, Observation] = {}
+
+    def checkpoint(df: DataFrame, name: str,
+                   layer: str | None = None) -> DataFrame:
+        if layer:
+            # filled by the checkpoint's own action: no extra job
+            observed[layer] = Observation(name)
+            df = df.observe(observed[layer], F.count(F.lit(1)).alias("rows"))
         if checkpoint_dir:
             path = os.path.join(checkpoint_dir, name)
             df.write.mode("overwrite").parquet(path)
@@ -69,18 +89,18 @@ def prepare(spark: SparkSession,
     site_areas = fmt.format_ski_areas_sites(sites)
     runs = fmt.attach_site_ski_areas(fmt.format_runs(runs_raw), sites,
                                      site_areas)
-    runs = checkpoint(normalize_runs(runs), "intermediate_runs")
+    runs = checkpoint(normalize_runs(runs), "intermediate_runs", "runs")
     lifts = checkpoint(
         fmt.attach_site_ski_areas(fmt.format_lifts(lifts_raw), sites,
                                   site_areas),
-        "intermediate_lifts")
+        "intermediate_lifts", "lifts")
     spots = checkpoint(
         fmt.attach_site_ski_areas(fmt.format_spots(spots_raw), sites,
                                   site_areas),
-        "intermediate_spots")
+        "intermediate_spots", "spots")
     ski_areas = checkpoint(
         fmt.format_ski_areas(ski_areas_raw, sites, skimap_areas),
-        "intermediate_ski_areas")
+        "intermediate_ski_areas", "ski_areas")
 
     if elevation_caches:
         # 3D geometries + the run elevation profile (Elevation.ts
@@ -89,13 +109,15 @@ def prepare(spark: SparkSession,
         runs = checkpoint(
             add_elevation_profile(add_elevation(runs, *elevation_caches),
                                   *elevation_caches),
-            "runs_elevation")
+            "runs_elevation", "runs")
         lifts = checkpoint(add_elevation(lifts, *elevation_caches),
-                           "lifts_elevation")
+                           "lifts_elevation", "lifts")
         spots = checkpoint(add_elevation(spots, *elevation_caches),
-                           "spots_elevation")
+                           "spots_elevation", "spots")
 
-    out = cluster_ski_areas(ski_areas, runs, lifts, spots)
+    row_bound = sum(o.get["rows"] for o in observed.values())
+    out = cluster_ski_areas(ski_areas, runs, lifts, spots,
+                            row_bound=row_bound)
     out = attach_viewport_hints(out)
     return {k: checkpoint(v, f"output_{k}") for k, v in out.items()}
 

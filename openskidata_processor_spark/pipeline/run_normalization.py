@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import feature_id
+from ..operators.barrier import truncate_lineage
 from ..operators.graph import connected_components
 from ..operators.priority import priority_merge_agg, tristate_or_agg
 
@@ -195,9 +196,13 @@ def _with_fingerprint(df: DataFrame) -> DataFrame:
 def combine_segments(merged: DataFrame) -> DataFrame:
     """Chain-merge consecutive equal-property segments (PointGraph):
     endpoint degree-2 connections within a fingerprint group, direction
-    compatible for oneway runs, stitched per connected component."""
-    seg = _with_fingerprint(merged).withColumn(
-        "seg_id", F.concat_ws("#", "fingerprint", "seg_key"))
+    compatible for oneway runs, stitched per connected component.
+
+    The segment table feeds five branches (endpoints, degree, the
+    endpoint self-join, isolated vertices, stitching); it is cut once so
+    the segment explode and merge run once, not once per branch."""
+    seg = truncate_lineage(_with_fingerprint(merged).withColumn(
+        "seg_id", F.concat_ws("#", "fingerprint", "seg_key")))
 
     # Oriented endpoints: 'start'/'end' in travel direction for oneway runs.
     start_key = F.when(F.col("is_reversed"), F.col("b_key")).otherwise(F.col("a_key"))
