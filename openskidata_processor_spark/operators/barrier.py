@@ -17,9 +17,8 @@ Two distinct needs, two helpers:
   problem.  It is also the fan-out barrier for pandas-UDF outputs: a
   frame whose Python UDFs feed several branches (a formatted layer read
   by the site join and by normalization, the merged segment table of run
-  normalization) is cut eagerly once, so each UDF runs once per row
-  instead of once per branch — AQE plans those branches as independent
-  stages, and a lazy ``persist`` would be filled by each of them.
+  normalization) is cut once, so each UDF runs once per row instead of
+  once per branch.
   Locally this is ``localCheckpoint`` (fast, executor-memory); with
   reliable mode on it becomes a real ``checkpoint()`` to the configured
   checkpoint directory, which survives executor loss.

@@ -212,51 +212,22 @@ def _cover_udf(cell_deg: float, pad_cells: int, radius_km: float = 0.0):
 # shuffle-disk-funneling argument for salting earlier on a real cluster is
 # plausible but unmeasured, so it does not move the default — tune via
 # OPENSKIDATA_HOT_CELL_ROWS per deployment instead.
-#
-# Gate: a row covers each cell at most once (covering cells are a set),
-# so a side of at most HOT_CELL_ROWS rows has no cell above HOT_CELL_ROWS
-# and salting could split nothing.  A caller that knows an upper bound on
-# both sides' rows (``row_bound``; ``prepare()`` observes its layers' row
-# counts at its eager checkpoints, at no extra job) lets ``_pairs`` skip
-# the two sample passes of the cover UDF, the broadcast and the salt
-# explodes whenever that bound is at most HOT_CELL_ROWS.  Without a bound
-# the sampled detection runs as before.
 HOT_CELL_ROWS = int(os.environ.get("OPENSKIDATA_HOT_CELL_ROWS", "16000"))
 HOT_CELL_SALTS = 8
 HOT_SAMPLE = 0.05
 
 
 def _pairs(left: DataFrame, right: DataFrame, radius_km: float,
-           predicate, row_bound: int | None = None) -> DataFrame:
+           predicate) -> DataFrame:
     """Candidate (lid, lgeom) × (rid, rgeom) pairs via cell equi-join +
     exact geometry predicate.  ``left``/``right`` must have columns
-    (lid, lgeom) / (rid, rgeom); ``row_bound``, when given, bounds the
-    rows of each side (see the hot-cell gate above)."""
+    (lid, lgeom) / (rid, rgeom)."""
     cell = max(radius_km / geo.KM_PER_DEG_LAT, 0.002)
     pad = int(math.ceil(radius_km / (geo.KM_PER_DEG_LAT * cell)))
     lx = left.withColumn(
         "__cell", F.explode(_cover_udf(cell, pad, radius_km)("lgeom")))
     rx = right.withColumn("__cell", F.explode(_cover_udf(cell, 0)("rgeom")))
-    keys = ["__cell"]
-    if row_bound is None or row_bound > HOT_CELL_ROWS:
-        lx, rx = _salt_hot_cells(left, right, lx, rx, cell, pad, radius_km)
-        keys += ["__sl", "__sr"]
-    cand = (lx.join(rx, keys).drop(*keys)
-            .dropDuplicates(["lid", "rid"]))
 
-    @F.pandas_udf(BooleanType())
-    def pred(g1: pd.Series, g2: pd.Series) -> pd.Series:
-        return pd.Series([predicate(json.loads(a), json.loads(b))
-                          for a, b in zip(g1, g2)])
-
-    return cand.filter(pred(F.col("lgeom"), F.col("rgeom")))
-
-
-def _salt_hot_cells(left: DataFrame, right: DataFrame, lx: DataFrame,
-                    rx: DataFrame, cell: float, pad: int,
-                    radius_km: float) -> tuple[DataFrame, DataFrame]:
-    """Add the salt keys ``__sl``/``__sr`` to the cell-exploded sides
-    ``lx``/``rx``: 0/0 outside hot cells, 2-D salted inside them."""
     sampled_threshold = HOT_CELL_ROWS * HOT_SAMPLE
     hot = (left.sample(HOT_SAMPLE, seed=7)
            .withColumn("__cell",
@@ -286,20 +257,28 @@ def _salt_hot_cells(left: DataFrame, right: DataFrame, lx: DataFrame,
           .withColumn("__sl", F.explode(
               F.when(F.col("__hot").isNotNull(), salts).otherwise(one)))
           .drop("__hot"))
-    return lx, rx
+    cand = (lx.join(rx, ["__cell", "__sl", "__sr"])
+            .drop("__cell", "__sl", "__sr")
+            .dropDuplicates(["lid", "rid"]))
+
+    @F.pandas_udf(BooleanType())
+    def pred(g1: pd.Series, g2: pd.Series) -> pd.Series:
+        return pd.Series([predicate(json.loads(a), json.loads(b))
+                          for a, b in zip(g1, g2)])
+
+    return cand.filter(pred(F.col("lgeom"), F.col("rgeom")))
 
 
-def dwithin_pairs(left: DataFrame, right: DataFrame, radius_km: float,
-                  row_bound: int | None = None) -> DataFrame:
+def dwithin_pairs(left: DataFrame, right: DataFrame,
+                  radius_km: float) -> DataFrame:
     return _pairs(left, right, radius_km,
-                  lambda a, b: geo.dwithin(a, b, radius_km), row_bound)
+                  lambda a, b: geo.dwithin(a, b, radius_km))
 
 
-def covered_by_pairs(objects: DataFrame, polygons: DataFrame,
-                     row_bound: int | None = None) -> DataFrame:
+def covered_by_pairs(objects: DataFrame, polygons: DataFrame) -> DataFrame:
     """(lid = object) covered by (rid = polygon)."""
     return _pairs(objects, polygons, 0.01,
-                  lambda a, b: geo.covered_by(a, b), row_bound)
+                  lambda a, b: geo.covered_by(a, b))
 
 
 def _slim(df: DataFrame, prefix: str) -> DataFrame:
@@ -376,8 +355,7 @@ def _member_geometry(sas: DataFrame, objs: DataFrame,
 # transitive expansion (passes 3/5/6) as per-activity connected components
 # ---------------------------------------------------------------------------
 
-def _transitive_claim(sas: DataFrame, objs: DataFrame, source: str,
-                      row_bound: int | None) -> DataFrame:
+def _transitive_claim(sas: DataFrame, objs: DataFrame, source: str) -> DataFrame:
     """Objects in no ski area join the nearest-by-500m-chain ski area of
     ``source`` sharing an activity; returns (object_id, ski_area_id)."""
     seeds_base = sas.filter(F.col("source") == source) \
@@ -418,7 +396,7 @@ def _transitive_claim(sas: DataFrame, objs: DataFrame, source: str,
     geoms = nodes.select("lid", "lgeom").distinct()
     right = geoms.select(F.col("lid").alias("rid"),
                          F.col("lgeom").alias("rgeom"))
-    prs = dwithin_pairs(geoms, right, MAX_DISTANCE_KM, row_bound) \
+    prs = dwithin_pairs(geoms, right, MAX_DISTANCE_KM) \
         .select(F.col("lid").alias("a"), F.col("rid").alias("b"))
     tagged_a = nodes.select(F.col("lid").alias("a"), F.col("__act").alias("act_a"))
     tagged_b = nodes.select(F.col("lid").alias("b"), F.col("__act").alias("act_b"))
@@ -450,16 +428,12 @@ def _transitive_claim(sas: DataFrame, objs: DataFrame, source: str,
 # ---------------------------------------------------------------------------
 
 def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
-                      lifts: DataFrame, spots: DataFrame,
-                      row_bound: int | None = None) -> dict[str, DataFrame]:
+                      lifts: DataFrame, spots: DataFrame) -> dict[str, DataFrame]:
     """Run passes 1–10; returns the augmented layers.
 
     Inputs are the formatted (and for runs, normalized + site-joined)
     layers.  ``ski_areas.ski_areas``-style membership lives on the objects
     (ids of their ski areas), exactly like the reference's working table.
-    ``row_bound``, when given, is at least the four inputs' total row
-    count; every spatial-join side is a subset of those rows, so it is
-    passed to ``_pairs`` as its hot-cell gate.
     """
     objs = prepare_objects(runs, lifts, spots).transform(_cut)
     sas = (ski_areas.select(
@@ -479,7 +453,7 @@ def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
     # Pass 2 — OSM polygon ski areas claim contained objects.
     polys = sas.filter(F.col("is_polygon") & (F.col("source") == "openstreetmap"))
     contained = covered_by_pairs(
-        _slim(objs, "l"), _slim(polys, "r"), row_bound) \
+        _slim(objs, "l"), _slim(polys, "r")) \
         .filter(_activity_compatible("lacts", "racts")) \
         .select(F.col("lid").alias("object_id"),
                 F.col("rid").alias("ski_area_id"))
@@ -515,7 +489,7 @@ def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
     objs = objs.transform(_cut)
 
     # Pass 3 — transitive expansion of OSM ski areas.
-    claims = _transitive_claim(sas, objs, "openstreetmap", row_bound)
+    claims = _transitive_claim(sas, objs, "openstreetmap")
     objs = _assign(objs, claims).transform(_cut)
     sas = _derive_activities(sas, objs).transform(_cut)
 
@@ -523,7 +497,7 @@ def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
     # object of the OSM area, activity compatible).
     skimap = sas.filter(F.col("source") == "skimap.org")
     near = dwithin_pairs(_slim(skimap, "l"), _slim(objs, "r"),
-                         MERGE_DISTANCE_KM, row_bound) \
+                         MERGE_DISTANCE_KM) \
         .filter(_activity_compatible("lacts", "racts"))
     targets = (near.join(objs.select(F.col("id").alias("rid"),
                                      F.explode("ski_areas").alias("target_id")),
@@ -579,18 +553,18 @@ def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
                    "id", "left_anti").transform(_cut)
 
     # Pass 5 — transitive expansion of remaining Skimap.org ski areas.
-    claims = _transitive_claim(sas, objs, "skimap.org", row_bound)
+    claims = _transitive_claim(sas, objs, "skimap.org")
     objs = _assign(objs, claims).transform(_cut)
     sas = _derive_activities(sas, objs).transform(_cut)
 
     # Pass 6 — generate ski areas from still-unassigned runs.
-    gen_sas, gen_assign = _generate_ski_areas(objs, row_bound)
+    gen_sas, gen_assign = _generate_ski_areas(objs)
     if gen_sas is not None:
         sas = sas.unionByName(gen_sas).transform(_cut)
         objs = _assign(objs, gen_assign).transform(_cut)
 
     # Pass 8 — lift stations ↔ lifts (J5/W1 argmin within 30 m).
-    objs, station_assoc = _associate_stations(objs, row_bound)
+    objs, station_assoc = _associate_stations(objs)
 
     # Pass 9/10 — augment + cleanup.
     member_counts = (objs.select(F.explode("ski_areas").alias("said"))
@@ -675,7 +649,7 @@ def cluster_ski_areas(ski_areas: DataFrame, runs: DataFrame,
     }
 
 
-def _generate_ski_areas(objs: DataFrame, row_bound: int | None):
+def _generate_ski_areas(objs: DataFrame):
     """Pass 6: CC over unassigned activity-sharing objects within 500 m;
     components seeded by a basis run become generated ski areas
     (:903-1032).  Downhill drops when the cluster has no lift."""
@@ -686,8 +660,7 @@ def _generate_ski_areas(objs: DataFrame, row_bound: int | None):
                          F.col("lgeom").alias("rgeom"),
                          F.col("lacts").alias("racts"))
     prs = (dwithin_pairs(nodes.select("lid", "lgeom"),
-                         right.select("rid", "rgeom"), MAX_DISTANCE_KM,
-                         row_bound)
+                         right.select("rid", "rgeom"), MAX_DISTANCE_KM)
            .join(nodes.select("lid", "lacts"), "lid")
            .join(right.select("rid", "racts"), "rid")
            .filter(F.arrays_overlap("lacts", "racts"))
@@ -757,8 +730,7 @@ def _generate_ski_areas(objs: DataFrame, row_bound: int | None):
     return gen_sas, assigns
 
 
-def _associate_stations(objs: DataFrame,
-                        row_bound: int | None) -> tuple[DataFrame, DataFrame]:
+def _associate_stations(objs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Pass 8 (LiftStationAssociator.ts:97-153): each lift_station spot
     associates to the argmin-distance lift within 30 m (ties broken by a
     shared ski area, then lift id).
@@ -781,7 +753,7 @@ def _associate_stations(objs: DataFrame,
         lifts.select(F.col("id").alias("rid"),
                      F.col("geometry").alias("rgeom"),
                      F.col("ski_areas").alias("rsa")),
-        STATION_DISTANCE_KM, row_bound)
+        STATION_DISTANCE_KM)
 
     @F.pandas_udf(DoubleType())
     def dist(g1: pd.Series, g2: pd.Series) -> pd.Series:

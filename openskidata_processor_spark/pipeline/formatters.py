@@ -407,12 +407,13 @@ def format_ski_areas(osm_landuse: DataFrame, sites: DataFrame,
 
 def format_spots(df: DataFrame) -> DataFrame:
     """InputSpotFeature → spot layer (SpotFormatter.ts:30-192): geometry →
-    centroid Point; five independent subtype extractors, unioned — a
-    feature can emit several spots.  The centroid and the id hash run
-    once, after the union, so each spot row crosses into Python once."""
+    centroid Point; five independent subtype extractors — a feature can
+    emit several spots.  Each feature's matching subtypes are gathered
+    into one array and exploded, so the centroid runs once per feature in
+    one Python pass (a union of five filtered branches runs it in five)."""
     tags = F.col("tags")
 
-    def spot(filter_cond: Column, spot_type: str, **extra: Column) -> DataFrame:
+    def spot(filter_cond: Column, spot_type: str, **extra: Column) -> Column:
         cols = {
             "dismount": F.lit(None).cast("string"),
             "name": F.lit(None).cast("string"),
@@ -422,19 +423,9 @@ def format_spots(df: DataFrame) -> DataFrame:
             "exit": F.lit(None).cast("boolean"),
         }
         cols.update(extra)
-        return df.filter(filter_cond).select(
-            F.lit("spot").alias("feature_type"),
+        return F.when(filter_cond, F.struct(
             F.lit(spot_type).alias("spot_type"),
-            cols["dismount"].alias("dismount"),
-            cols["name"].alias("name"),
-            cols["lift_id"].alias("lift_id"),
-            cols["position"].alias("position"),
-            cols["entry"].alias("entry"),
-            cols["exit"].alias("exit"),
-            _empty_str_array().alias("ski_areas"),
-            _osm_source(F.col("osm_type"), F.col("osm_id")).alias("sources"),
-            F.col("geometry"),
-        )
+            *(c.alias(k) for k, c in cols.items())))
 
     dismount = osm.tag(tags, "piste:dismount")
     crossing = spot(dismount.isin("yes", "no", "sometimes"), "crossing",
@@ -461,12 +452,24 @@ def format_spots(df: DataFrame) -> DataFrame:
                       "avalanche_transceiver_checkpoint")
     halfpipe = spot(osm.tag(tags, "man_made") == "piste:halfpipe", "halfpipe")
 
-    spots = (crossing.unionByName(lift_station).unionByName(training)
-             .unionByName(checkpoint).unionByName(halfpipe)
-             .withColumn("geometry", centroid_udf(F.col("geometry"))))
-    return spots.select(
+    matched = (
+        df.select(
+            F.filter(F.array(crossing, lift_station, training, checkpoint,
+                             halfpipe), lambda s: s.isNotNull()).alias("__spots"),
+            "osm_type", "osm_id", "geometry")
+        .filter(F.size("__spots") > 0)
+        .withColumn("geometry", centroid_udf(F.col("geometry")))
+        .withColumn("s", F.explode("__spots"))
+    )
+    return matched.select(
         feature_id(F.lit("spot"), F.col("geometry")).alias("id"),
-        *spots.columns)
+        F.lit("spot").alias("feature_type"),
+        "s.spot_type", "s.dismount", "s.name", "s.lift_id", "s.position",
+        "s.entry", "s.exit",
+        _empty_str_array().alias("ski_areas"),
+        _osm_source(F.col("osm_type"), F.col("osm_id")).alias("sources"),
+        F.col("geometry"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -495,8 +498,9 @@ def attach_site_ski_areas(layer: DataFrame, sites: DataFrame,
 
     ``layer`` is read twice here (the source explode and the join back)
     and again by every consumer of the result, so it is cut first: its
-    formatter UDFs run once per feature, not once per reader."""
-    layer = truncate_lineage(layer)
+    formatter UDFs run once per feature, not once per reader.  The cut is
+    lazy; the first action on the result fills it."""
+    layer = truncate_lineage(layer, eager=False)
     site_ids = site_ski_areas.select(
         F.col("id").alias("__site_feature_id"),
         # F.get: formatters always emit >= 1 source, but a violated

@@ -22,8 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import osm as osm_fns
 from ..operators.barrier import truncate_lineage
@@ -56,18 +55,8 @@ def prepare(spark: SparkSession,
       table before its five branches;
     - the phase checkpoints below (``intermediate_*``, elevation,
       ``output_*``) bound the plans between phases.
-    The phase checkpoints of the four layers that reach clustering also
-    observe their row counts; their sum is ``cluster_ski_areas``'
-    hot-cell gate.
     """
-    observed: dict[str, Observation] = {}
-
-    def checkpoint(df: DataFrame, name: str,
-                   layer: str | None = None) -> DataFrame:
-        if layer:
-            # filled by the checkpoint's own action: no extra job
-            observed[layer] = Observation(name)
-            df = df.observe(observed[layer], F.count(F.lit(1)).alias("rows"))
+    def checkpoint(df: DataFrame, name: str) -> DataFrame:
         if checkpoint_dir:
             path = os.path.join(checkpoint_dir, name)
             df.write.mode("overwrite").parquet(path)
@@ -89,18 +78,18 @@ def prepare(spark: SparkSession,
     site_areas = fmt.format_ski_areas_sites(sites)
     runs = fmt.attach_site_ski_areas(fmt.format_runs(runs_raw), sites,
                                      site_areas)
-    runs = checkpoint(normalize_runs(runs), "intermediate_runs", "runs")
+    runs = checkpoint(normalize_runs(runs), "intermediate_runs")
     lifts = checkpoint(
         fmt.attach_site_ski_areas(fmt.format_lifts(lifts_raw), sites,
                                   site_areas),
-        "intermediate_lifts", "lifts")
+        "intermediate_lifts")
     spots = checkpoint(
         fmt.attach_site_ski_areas(fmt.format_spots(spots_raw), sites,
                                   site_areas),
-        "intermediate_spots", "spots")
+        "intermediate_spots")
     ski_areas = checkpoint(
         fmt.format_ski_areas(ski_areas_raw, sites, skimap_areas),
-        "intermediate_ski_areas", "ski_areas")
+        "intermediate_ski_areas")
 
     if elevation_caches:
         # 3D geometries + the run elevation profile (Elevation.ts
@@ -109,15 +98,13 @@ def prepare(spark: SparkSession,
         runs = checkpoint(
             add_elevation_profile(add_elevation(runs, *elevation_caches),
                                   *elevation_caches),
-            "runs_elevation", "runs")
+            "runs_elevation")
         lifts = checkpoint(add_elevation(lifts, *elevation_caches),
-                           "lifts_elevation", "lifts")
+                           "lifts_elevation")
         spots = checkpoint(add_elevation(spots, *elevation_caches),
-                           "spots_elevation", "spots")
+                           "spots_elevation")
 
-    row_bound = sum(o.get["rows"] for o in observed.values())
-    out = cluster_ski_areas(ski_areas, runs, lifts, spots,
-                            row_bound=row_bound)
+    out = cluster_ski_areas(ski_areas, runs, lifts, spots)
     out = attach_viewport_hints(out)
     return {k: checkpoint(v, f"output_{k}") for k, v in out.items()}
 

@@ -3,20 +3,17 @@
 A frame read by several branches re-runs its Python UDFs once per branch
 unless it is materialized where it fans out.  These tests count what the
 formatter UDFs actually see during a whole ``prepare()``, and check that
-the spatial joins skip hot-cell sampling when the observed row counts
-prove no grid cell can be hot.
+the spot formatter crosses into Python in one pass.
 """
 
 from __future__ import annotations
 
-import json
 from collections import Counter
 
 import pandas as pd
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import functions as F
 
-from openskidata_processor_spark.pipeline import clustering as cl
 from openskidata_processor_spark.pipeline import formatters as fmt
 from openskidata_processor_spark.pipeline.prepare import prepare
 from openskidata_processor_spark.sources.synthetic import resort_grid
@@ -50,11 +47,6 @@ def test_prepare_runs_each_formatter_udf_once_per_row(spark, monkeypatch):
         udf, seen[name] = _counting(spark, getattr(fmt, name))
         monkeypatch.setattr(fmt, name, udf)
 
-    def no_salting(*args, **kwargs):
-        raise AssertionError("hot-cell sampling ran under a row bound")
-
-    # 3 resorts: every layer is far below HOT_CELL_ROWS
-    monkeypatch.setattr(cl, "_salt_hot_cells", no_salting)
     grid = resort_grid(spark, 3)
     out = prepare(spark, **grid)
     assert out["runs"].count() > 0
@@ -73,18 +65,18 @@ def test_prepare_runs_each_formatter_udf_once_per_row(spark, monkeypatch):
         assert seen[name].value == want, name
 
 
-def test_pairs_samples_hot_cells_only_above_row_bound(spark):
-    """At or below HOT_CELL_ROWS rows per side no cell can be hot, so the
-    executed plan has no hot-cell sample; the pairs are the same."""
-    rows = [(f"p{i:02d}", json.dumps(
-        {"type": "Point",
-         "coordinates": [10.0 + (i % 8) * 0.0003,
-                         47.0 + (i // 8) * 0.0003]})) for i in range(64)]
-    left = spark.createDataFrame(rows, "lid string, lgeom string")
-    right = left.toDF("rid", "rgeom")
-    for bound, sampled in ((cl.HOT_CELL_ROWS, False),
-                           (cl.HOT_CELL_ROWS + 1, True), (None, True)):
-        pairs = cl.dwithin_pairs(left, right, 0.5, row_bound=bound)
-        assert len({(r.lid, r.rid) for r in pairs.collect()}) == 64 * 64
-        plan = pairs._jdf.queryExecution().executedPlan().toString()
-        assert ("Sample" in plan) == sampled, bound
+def test_format_spots_runs_one_python_node(spark):
+    """The five subtype extractors share one centroid pass; a feature
+    matching two subtypes still becomes two spots."""
+    raw = spark.createDataFrame(
+        [("node", 1, {"aerialway": "station", "piste:dismount": "yes"},
+          '{"type":"Point","coordinates":[11.1,47.5]}'),
+         ("way", 2, {"man_made": "piste:halfpipe"},
+          '{"type":"LineString","coordinates":[[11.1,47.5],[11.2,47.6]]}')],
+        "osm_type string, osm_id long, tags map<string,string>, "
+        "geometry string")
+    spots = fmt.format_spots(raw)
+    plan = spots._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert sorted(r.spot_type for r in spots.collect()) == [
+        "crossing", "halfpipe", "lift_station"]
